@@ -1436,12 +1436,16 @@ class MultimodalSpec extends SparkTestBase {
 class AsOfJoinSpec extends SparkTestBase {
   import spark.implicits._
 
+  // one right row per (key, time) in most cases below: max(v) is then the
+  // row's own value
+  private val maxV = Seq("v" -> max(col("v")))
+
   test("backward as-of join picks latest right <= left time, per key") {
     val left = Seq((1L, 10L, "e1"), (1L, 25L, "e2"), (2L, 10L, "e3"), (3L, 10L, "e4"))
       .toDF("k", "t", "ev")
     val right = Seq((1L, 5L, 100L), (1L, 20L, 200L), (1L, 30L, 300L), (2L, 10L, 400L))
       .toDF("rk", "rt", "v")
-    val out = AsOfJoin.backward(left, right, "k", "rk", "t", "rt", Seq("v"))
+    val out = AsOfJoin.backwardAgg(left, right, "k", "rk", "t", "rt", maxV)
       .select("ev", "v").as[(String, Long)].collect().toMap
     assert(out == Map("e1" -> 100L, "e2" -> 200L, "e3" -> 400L)) // e4: no match, inner drops
   }
@@ -1452,7 +1456,7 @@ class AsOfJoinSpec extends SparkTestBase {
     val left = Seq((1L, 100L, "e1"), (2L, 100L, "e2")).toDF("k", "t", "ev")
     val right = Seq((1L, 85L, 10L), (2L, 99L, 20L)).toDF("rk", "rt", "v")
     def run(tolUs: Option[Long], inner: Boolean) =
-      AsOfJoin.backward(left, right, "k", "rk", "t", "rt", Seq("v"),
+      AsOfJoin.backwardAgg(left, right, "k", "rk", "t", "rt", maxV,
         inner = inner, toleranceUs = tolUs)
     assert(run(Some(20000000L), inner = true).select("ev", "v")
       .as[(String, Long)].collect().toMap == Map("e1" -> 10L, "e2" -> 20L))
@@ -1464,7 +1468,7 @@ class AsOfJoinSpec extends SparkTestBase {
       .select("ev", "v").collect().map(r => r.getString(0) -> r.isNullAt(1)).toMap
     assert(outer == Map("e1" -> true, "e2" -> false))
     // nearest honors the same gate in both directions
-    val near = AsOfJoin.nearest(left, right, "k", "rk", "t", "rt", Seq("v"),
+    val near = AsOfJoin.nearestAgg(left, right, "k", "rk", "t", "rt", maxV,
       toleranceUs = Some(5000000L)).select("ev", "v")
       .as[(String, Long)].collect().toMap
     assert(near == Map("e2" -> 20L))
@@ -1475,7 +1479,7 @@ class AsOfJoinSpec extends SparkTestBase {
       .toDF("k", "t", "ev")
     val right = Seq((1L, 5L, 100L), (1L, 25L, 200L), (1L, 30L, 300L), (2L, 10L, 400L))
       .toDF("rk", "rt", "v")
-    val out = AsOfJoin.forward(left, right, "k", "rk", "t", "rt", Seq("v"))
+    val out = AsOfJoin.forwardAgg(left, right, "k", "rk", "t", "rt", maxV)
       .select("ev", "v").as[(String, Long)].collect().toMap
     // e2 matches its exact-time right row; e3 (past the last right row)
     // and e4 (right only earlier) drop under inner semantics
@@ -1488,7 +1492,7 @@ class AsOfJoinSpec extends SparkTestBase {
       .toDF("k", "t", "ev")
     val right = Seq((1L, 5L, 100L), (1L, 15L, 200L), (2L, 10L, 400L))
       .toDF("rk", "rt", "v")
-    val out = AsOfJoin.nearest(left, right, "k", "rk", "t", "rt", Seq("v"))
+    val out = AsOfJoin.nearestAgg(left, right, "k", "rk", "t", "rt", maxV)
       .select("ev", "v").as[(String, Long)].collect().toMap
     // eq: both at distance 5 -> backward; only_fw/only_bw: one-sided;
     // none: no right rows for key 3, inner drops
@@ -1499,7 +1503,7 @@ class AsOfJoinSpec extends SparkTestBase {
   test("nearest as-of: exact-time right row is the zero-distance backward match") {
     val left = Seq((1L, 10L, "x")).toDF("k", "t", "ev")
     val right = Seq((1L, 10L, 100L), (1L, 11L, 200L)).toDF("rk", "rt", "v")
-    val out = AsOfJoin.nearest(left, right, "k", "rk", "t", "rt", Seq("v"))
+    val out = AsOfJoin.nearestAgg(left, right, "k", "rk", "t", "rt", maxV)
       .select("ev", "v").as[(String, Long)].collect().toMap
     assert(out == Map("x" -> 100L))
   }
@@ -1511,7 +1515,8 @@ class AsOfJoinSpec extends SparkTestBase {
     val left = Seq((1L, 6L, "e1")).toDF("k", "t", "ev")
     val right = Seq((1L, 1L, Some(7L), Some(5L)), (1L, 5L, Some(9L), None))
       .toDF("rk", "rt", "ok", "total")
-    val out = AsOfJoin.backward(left, right, "k", "rk", "t", "rt", Seq("ok", "total"))
+    val out = AsOfJoin.backwardAgg(left, right, "k", "rk", "t", "rt",
+        Seq("ok" -> max(col("ok")), "total" -> max(col("total"))))
       .select("ok", "total").collect().head
     assert(out.getLong(0) == 9L && out.isNullAt(1), s"torn row: $out")
   }
@@ -1519,63 +1524,83 @@ class AsOfJoinSpec extends SparkTestBase {
   test("left as-of keeps unmatched rows with null") {
     val left = Seq((3L, 10L, "e4")).toDF("k", "t", "ev")
     val right = Seq((1L, 5L, 100L)).toDF("rk", "rt", "v")
-    val out = AsOfJoin.backward(left, right, "k", "rk", "t", "rt", Seq("v"), inner = false)
+    val out = AsOfJoin.backwardAgg(left, right, "k", "rk", "t", "rt", maxV, inner = false)
     assert(out.count() == 1 && out.filter(col("v").isNull).count() == 1)
   }
 
   test("dedupRightBy collapses duplicate right (key,time) rows deterministically") {
     val left = Seq((1L, 10L, "e1"), (1L, 3L, "e2")).toDF("k", "t", "ev")
-    // two right rows at (1, 5): without dedup the fill would be
-    // nondeterministic; max_by(v) must keep v=200
+    // two right rows at (1, 5): without a tie-break the fill would be
+    // nondeterministic; max_by(v, v) must keep v=200
     val right = Seq((1L, 5L, 100L), (1L, 5L, 200L), (1L, 8L, 50L))
       .toDF("rk", "rt", "v")
-    val bw = AsOfJoin.backward(left, right, "k", "rk", "t", "rt", Seq("v"),
-      dedupRightBy = Some(col("v")))
+    val byV = Seq("v" -> max_by(col("v"), col("v")))
+    val bw = AsOfJoin.backwardAgg(left, right, "k", "rk", "t", "rt", byV)
       .select("ev", "v").as[(String, Long)].collect().toMap
     assert(bw == Map("e1" -> 50L)) // e2 at t=3 precedes all right rows
-    val fw = AsOfJoin.forward(left, right, "k", "rk", "t", "rt", Seq("v"),
-      dedupRightBy = Some(col("v")))
+    val fw = AsOfJoin.forwardAgg(left, right, "k", "rk", "t", "rt", byV)
       .select("ev", "v").as[(String, Long)].collect().toMap
     assert(fw == Map("e2" -> 200L)) // earliest right >= 3 is the deduped (1,5) row
-    val nr = AsOfJoin.nearest(left, right, "k", "rk", "t", "rt", Seq("v"),
-      dedupRightBy = Some(col("v")))
+    val nr = AsOfJoin.nearestAgg(left, right, "k", "rk", "t", "rt", byV)
       .select("ev", "v").as[(String, Long)].collect().toMap
     assert(nr == Map("e1" -> 50L, "e2" -> 200L))
   }
 
   test("agg variants match groupBy-then-join on every direction (r15 rewrite)") {
     // raw right with DUPLICATE (key, time) groups, a NULL value, an
-    // exact-time tie, a left-only key and a right-only key — the agg
-    // variants must reproduce groupBy(key,time).agg(...) + plain join
-    // byte for byte (this is the q17/q39/q40 equivalence contract)
-    val left = Seq((1L, 10L, "a"), (1L, 25L, "b"), (1L, 5L, "c"),
-      (2L, 20L, "d"), (3L, 7L, "e")).toDF("k", "t", "ev")
+    // exact-time tie, an equidistant nearest pair (f), a left-only key
+    // and a right-only key — the agg variants must reproduce
+    // groupBy(key,time).agg(...) followed by an as-of join, here computed
+    // by brute force on the driver (this is the q17/q39/q40 equivalence
+    // contract)
+    val leftRows = Seq((1L, 10L, "a"), (1L, 25L, "b"), (1L, 5L, "c"),
+      (2L, 20L, "d"), (3L, 7L, "e"), (1L, 15L, "f"))
+    val left = leftRows.toDF("k", "t", "ev")
     val rightRaw = Seq(
       (1L, 5L, Some(100L), Some(7L)), (1L, 5L, Some(150L), Some(3L)),
       (1L, 25L, Some(200L), None), (1L, 30L, None: Option[Long], Some(9L)),
       (2L, 50L, Some(400L), Some(1L)), (4L, 1L, Some(500L), Some(2L)))
       .toDF("rk", "rt", "ok", "total")
     val aggs = Seq("ok" -> max(col("ok")), "total" -> sum(col("total")))
+    // (rk, rt, ok, total) per group; ok/total boxed or null
     val pre = rightRaw.groupBy(col("rk"), col("rt"))
       .agg(max(col("ok")).as("ok"), sum(col("total")).as("total"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.get(2), r.get(3))).toSeq
+    // times are seconds; distances compare in µs like the operator's gate
+    def expected(dir: String, inner: Boolean, tol: Option[Long]): Set[Seq[Any]] =
+      leftRows.flatMap { case (k, t, ev) =>
+        val groups = pre.filter(_._1 == k)
+        val back = groups.filter(_._2 <= t).maxByOption(_._2)
+        val fwd = groups.filter(_._2 >= t).minByOption(_._2)
+        val hit = dir match {
+          case "backward" => back
+          case "forward" => fwd
+          case "nearest" => (back, fwd) match {
+            case (Some(b), Some(f)) => Some(if (t - b._2 <= f._2 - t) b else f)
+            case _ => back.orElse(fwd)
+          }
+        }
+        val gated = hit.filter(g => tol.forall(math.abs(t - g._2) * 1000000L <= _))
+        gated match {
+          case Some((_, rt, ok, total)) => Some(Seq[Any](ev, ok, total, rt))
+          case None => if (inner) None else Some(Seq[Any](ev, null, null, null))
+        }
+      }.toSet
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
       df.select("ev", "ok", "total", "asof_time")
         .collect().map(_.toSeq).toSet
+    // spot-check the reference itself: the duplicate (1, 5) group
+    // collapses to (150, 10), and f's equidistant pair resolves backward
+    assert(expected("nearest", inner = true, None).contains(Seq("f", 150L, 10L, 5L)))
     for (inner <- Seq(true, false); tol <- Seq(None, Some(12000000L))) {
       assert(rows(AsOfJoin.backwardAgg(left, rightRaw, "k", "rk", "t", "rt",
-          aggs, inner = inner, toleranceUs = tol)) ==
-        rows(AsOfJoin.backward(left, pre, "k", "rk", "t", "rt",
-          Seq("ok", "total"), inner = inner, toleranceUs = tol)),
+          aggs, inner = inner, toleranceUs = tol)) == expected("backward", inner, tol),
         s"backwardAgg mismatch inner=$inner tol=$tol")
       assert(rows(AsOfJoin.forwardAgg(left, rightRaw, "k", "rk", "t", "rt",
-          aggs, inner = inner, toleranceUs = tol)) ==
-        rows(AsOfJoin.forward(left, pre, "k", "rk", "t", "rt",
-          Seq("ok", "total"), inner = inner, toleranceUs = tol)),
+          aggs, inner = inner, toleranceUs = tol)) == expected("forward", inner, tol),
         s"forwardAgg mismatch inner=$inner tol=$tol")
       assert(rows(AsOfJoin.nearestAgg(left, rightRaw, "k", "rk", "t", "rt",
-          aggs, inner = inner, toleranceUs = tol)) ==
-        rows(AsOfJoin.nearest(left, pre, "k", "rk", "t", "rt",
-          Seq("ok", "total"), inner = inner, toleranceUs = tol)),
+          aggs, inner = inner, toleranceUs = tol)) == expected("nearest", inner, tol),
         s"nearestAgg mismatch inner=$inner tol=$tol")
     }
   }
@@ -1583,14 +1608,17 @@ class AsOfJoinSpec extends SparkTestBase {
   test("agg variants plan ONE exchange for the whole join (no right pre-agg shuffle)") {
     val left = Seq((1L, 10L, "a")).toDF("k", "t", "ev")
     val rightRaw = Seq((1L, 5L, 100L)).toDF("rk", "rt", "v")
-    val aggs = Seq("v" -> max(col("v")))
-    for ((name, out) <- Seq(
-        "backwardAgg" -> AsOfJoin.backwardAgg(left, rightRaw, "k", "rk", "t", "rt", aggs),
-        "forwardAgg" -> AsOfJoin.forwardAgg(left, rightRaw, "k", "rk", "t", "rt", aggs),
-        "nearestAgg" -> AsOfJoin.nearestAgg(left, rightRaw, "k", "rk", "t", "rt", aggs))) {
+    // the group window shares the ascending fill's sort; only nearest's
+    // mirrored forward fill adds a second (in-partition) sort
+    for ((name, out, wantSorts) <- Seq(
+        ("backwardAgg", AsOfJoin.backwardAgg(left, rightRaw, "k", "rk", "t", "rt", maxV), 1),
+        ("forwardAgg", AsOfJoin.forwardAgg(left, rightRaw, "k", "rk", "t", "rt", maxV), 1),
+        ("nearestAgg", AsOfJoin.nearestAgg(left, rightRaw, "k", "rk", "t", "rt", maxV), 2))) {
       val plan = out.queryExecution.executedPlan.toString
       val exchanges = plan.linesIterator.count(_.contains("Exchange"))
       assert(exchanges == 1, s"$name plans $exchanges exchanges (want 1):\n$plan")
+      val sorts = plan.linesIterator.count(_.contains("Sort ["))
+      assert(sorts == wantSorts, s"$name plans $sorts sorts (want $wantSorts):\n$plan")
       // the group agg's FULL-unbounded frame is the O(group)
       // UnboundedWindowFunctionFrame; only a moving-start frame ending
       // at unboundedfollowing re-aggregates the suffix per row (O(k²))
@@ -1600,18 +1628,48 @@ class AsOfJoinSpec extends SparkTestBase {
   }
 
   test("forward/nearest fills use running frames only (no O(k^2) following frame)") {
-    // plan-shape guard for the hot-key fix: every window frame in the
-    // physical plan must be "unboundedpreceding$() ... currentrow$()" —
-    // an unboundedfollowing$() frame would re-aggregate the partition
-    // suffix per row
+    // plan-shape guard for the hot-key fix: every fill frame in the
+    // physical plan must be "unboundedpreceding$() ... currentrow$()" — a
+    // frame ending at unboundedfollowing$() with a moving start would
+    // re-aggregate the partition suffix per row. The only other frame is
+    // the group aggregate's full-unbounded one.
     val left = Seq((1L, 10L, "e1")).toDF("k", "t", "ev")
     val right = Seq((1L, 5L, 100L)).toDF("rk", "rt", "v")
-    for (out <- Seq(
-        AsOfJoin.forward(left, right, "k", "rk", "t", "rt", Seq("v")),
-        AsOfJoin.nearest(left, right, "k", "rk", "t", "rt", Seq("v")))) {
+    val frame = """specifiedwindowframe\(rowframe, ([^,]+), ([^)]+\))\)""".r
+    val running = ("unboundedpreceding$()", "currentrow$()")
+    val full = ("unboundedpreceding$()", "unboundedfollowing$()")
+    for ((out, wantFills) <- Seq(
+        AsOfJoin.forwardAgg(left, right, "k", "rk", "t", "rt", maxV) -> 1,
+        AsOfJoin.nearestAgg(left, right, "k", "rk", "t", "rt", maxV) -> 2)) {
       val plan = out.queryExecution.executedPlan.toString
-      assert(!plan.toLowerCase.contains("unboundedfollowing"),
-        s"following-frame window found in plan:\n$plan")
+      val frames = frame.findAllMatchIn(plan.toLowerCase).map(m => (m.group(1), m.group(2))).toSeq
+      assert(frames.count(_ == running) == wantFills,
+        s"want $wantFills running fill frames:\n$plan")
+      assert(frames.toSet.subsetOf(Set(running, full)),
+        s"non-running window frame found in plan:\n$plan")
+    }
+  }
+
+  test("reserved names: a right column __s is rejected, not silently replaced") {
+    // forwardAgg writes its negated-micros sort key to __s; an agg reading
+    // a right column of that name would aggregate the sort key instead
+    val left = Seq((1L, 10L, "e1")).toDF("k", "t", "ev")
+    val right = Seq((1L, 20L, 7L)).toDF("rk", "rt", "__s")
+    val e = intercept[IllegalArgumentException](
+      AsOfJoin.forwardAgg(left, right, "k", "rk", "t", "rt", Seq("v" -> max(col("__s")))))
+    assert(e.getMessage.contains("__s"), e.getMessage)
+  }
+
+  test("reserved names: a left column __b is rejected, not overwritten by nearest's fill") {
+    // nearestAgg writes its backward fill struct to __b; a left column of
+    // that name would come back as the struct. Spark resolves names
+    // case-insensitively by default, so __B collides too.
+    val right = Seq((1L, 5L, 100L)).toDF("rk", "rt", "v")
+    for (name <- Seq("__b", "__B")) {
+      val left = Seq((1L, 10L, "e1")).toDF("k", "t", name)
+      val e = intercept[IllegalArgumentException](
+        AsOfJoin.nearestAgg(left, right, "k", "rk", "t", "rt", maxV))
+      assert(e.getMessage.contains(name), e.getMessage)
     }
   }
 }
